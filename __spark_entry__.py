@@ -5124,69 +5124,67 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_dsir_scores": q_doc_dsir_scores,
         "diag_engine_versions": q_diag_engine_versions,
     }
-    # --- r17 head rotation (tools/check_rotation.py --plan at r17,
-    # --- the same plan+simulate discipline as the r16 head): every
-    # --- r16-head row now carries fresh r16 evidence, so the r17 head
-    # --- rotates to the 49 rows the 4-window invariant needs next —
-    # --- the 2 net-new X201/X202 rows and the 47 rows whose newest
-    # --- green driver row is r13. diag_session_config keeps its
-    # --- standing slot (the per-round environment fingerprint);
-    # --- diag_det_mn_code steps out of the head — its det_ln
-    # --- row-count checksum is superseded by det_mn_probe's
-    # --- value-hashed r16-green row, and diag_ rows are
-    # --- invariant-exempt wherever they sit. --simulate exits 0 on
-    # --- this order (test_rotation_simulation_green).
+    # --- r18 head rotation (tools/check_rotation.py --plan at r18,
+    # --- the same plan+simulate discipline as the r17 head): every
+    # --- r17-head row now carries fresh r17 evidence, so at the r18
+    # --- gate the 4-window bound moves to r15+ and the head rotates to
+    # --- the 49 rows whose newest green gate row is oldest — the 47
+    # --- r14-evidence rows, then the two oldest r15 rows.
+    # --- diag_session_config keeps its standing slot (the per-round
+    # --- environment fingerprint). Order only: no query added,
+    # --- removed, renamed or changed. --simulate exits 0 on this
+    # --- order (test_rotation_simulation_green).
     head = [
         "diag_session_config",
-        "doc_calibration",
-        "doc_dsir_scores",
-        "tpch_q15_top_supplier",
-        "tpch_q16_supplier_cnt",
-        "mm_wav_features",
-        "emb_semantic_decontaminate",
-        "tpch_q19_discount_promo",
-        "mm_image_features",
-        "tpch_q7_volume_shipping",
-        "tpch_q8_market_share",
-        "tpch_q9_product_profit",
-        "tpch_q14_promo_share",
-        "mm_video_features",
-        "tsdb_raw_filter",
-        "tsdb_windowed_2d",
-        "tsdb_cross_series_daily",
-        "tsdb_interp_linear",
-        "tsdb_rate_daily",
-        "tsdb_rollup_daily",
-        "tsdb_wide_frame_daily",
-        "tsdb_groupby_total",
-        "tsdb_stddev_weekly",
-        "tsdb_downsample_6h",
-        "tsdb_overlapping_windows",
-        "doc_dedup_clusters",
-        "emb_cosine_topk",
-        "emb_batch_topk",
-        "emb_near_dup",
-        "mm_extract_features",
-        "mm_frame_sample",
-        "doc_token_quantiles",
-        "doc_decontaminate",
-        "doc_top_trigrams",
-        "doc_ngram_jaccard",
-        "doc_dedup_exact_stats",
-        "doc_text_stats",
-        "doc_split_stats",
-        "events_sampled_hourly",
-        "tpch_q1_pricing",
-        "tpch_join_segment_month",
-        "tpch_q3_top_orders",
-        "tpch_q6_forecast_revenue",
-        "tpch_join_nation_revenue",
-        "tpch_q5_local_supplier",
-        "doc_budget_selection",
-        "stream_dedup_hourly",
-        "stream_sessions_30m",
-        "stream_counter_increase",
-        "doc_length_histogram",
+        "doc_normalized_dedup",
+        "doc_unigram_logprob",
+        "doc_script_profile",
+        "tsdb_irate_daily",
+        "doc_corpus_diff",
+        "tsdb_label_cardinality",
+        "emb_group_diversity",
+        "doc_bm25_topk",
+        "doc_mixture_weights",
+        "doc_winnow_decontaminate",
+        "tsdb_mad_daily",
+        "events_value_heatmap",
+        "tsdb_integral_daily",
+        "doc_zipf_fit",
+        "doc_cooccur_pmi",
+        "events_hampel_hourly",
+        "emb_pq_topk",
+        "events_heavy_hitters",
+        "tsdb_theilsen_daily",
+        "events_assoc_rules",
+        "doc_bigram_logprob",
+        "doc_classifier_score",
+        "tsdb_ols_trend_daily",
+        "tsdb_xcorr_daily",
+        "events_hist_quantile",
+        "doc_hybrid_rrf",
+        "events_bloom_semi",
+        "stream_cms_sketch",
+        "tsdb_seasonal_decompose",
+        "events_path_trigrams",
+        "doc_readability",
+        "emb_hard_negatives",
+        "events_key_skew",
+        "events_benford",
+        "events_interarrival",
+        "tsdb_corr_matrix",
+        "events_new_returning",
+        "doc_psi_drift",
+        "doc_source_overlap",
+        "doc_oov_rate",
+        "tsdb_minmax_decimate",
+        "events_attribution",
+        "emb_kmeans_profile",
+        "events_alert_episodes",
+        "tsdb_slo_burn",
+        "tsdb_adjusted_anomaly",
+        "emb_mmr_topk",
+        "tpch_q10_returned_items",
+        "events_pagerank",
     ]
     assert len(head) == 50 and all(q in table for q in head)
     hset = set(head)

@@ -658,3 +658,66 @@ def test_schema_hot_reload_on_external_edit(tmp_path, spark):
     before = a.config
     a.querier()
     assert a.config is before
+
+
+def test_rollup_builders_emit_the_rollup_schema(spark, make_samples):
+    """schema.ROLLUP_SCHEMA is the per-series rollup format:
+    build_rollup and merge_partials output its field names and types in
+    its order; the label rollup keeps (name, <labels>, bucket,
+    partials)."""
+    from v3io_tsdb_spark.rollup import (
+        PARTIAL_COLS, build_label_rollup, build_rollup, merge_partials,
+    )
+    from v3io_tsdb_spark.schema import ROLLUP_SCHEMA
+
+    df = make_samples(
+        [("cpu", {"os": "linux"}, [(i * 20 * MIN, float(i)) for i in range(9)]),
+         ("cpu", {}, [(i * 20 * MIN, 1.0) for i in range(3)])],
+        t0=T0H,
+    )
+    want = [(f.name, f.dataType) for f in ROLLUP_SCHEMA.fields]
+    partial = build_rollup(df, HOUR)
+    assert [(f.name, f.dataType) for f in partial.schema.fields] == want
+    merged = merge_partials(partial.unionByName(partial))
+    assert [(f.name, f.dataType) for f in merged.schema.fields] == want
+    assert merged.count() == partial.count()
+    assert build_label_rollup(df, HOUR, ("os",)).columns == [
+        "name", "os", "bucket", *PARTIAL_COLS
+    ]
+
+
+def test_delete_kinds_rebuild_failure_keeps_sidecar(tmp_path, spark, monkeypatch):
+    """A failed series-kind rebuild during delete() propagates: the
+    delete raises and the old kinds sidecar is still there, instead of
+    the failure being swallowed and the sidecar deleted."""
+    from v3io_tsdb_spark import appender
+
+    a = _mk(tmp_path, spark)
+    a.append(
+        [{"ts": T0 + i * MIN, "name": "cpu", "labels": {}, "value": 1.0} for i in range(3)]
+        + [{"ts": T0 + i * MIN, "name": "log", "labels": {}, "value_str": "x"} for i in range(3)]
+    )
+    before = sorted(tuple(r) for r in spark.read.parquet(a.kinds_path).collect())
+    assert len(before) == 2
+
+    def failing_kinds(df):
+        raise RuntimeError("kinds rebuild failed")
+
+    monkeypatch.setattr(appender, "series_kinds", failing_kinds)
+    with pytest.raises(RuntimeError, match="kinds rebuild failed"):
+        a.delete(metrics=["cpu"])
+    monkeypatch.undo()
+    assert sorted(tuple(r) for r in spark.read.parquet(a.kinds_path).collect()) == before
+
+
+def test_schema_file_with_removed_samples_partitions_loads(tmp_path):
+    """Schema files written before ``samples_partitions`` was removed
+    from TSDBConfig still carry the key; loading drops it."""
+    import json
+
+    from v3io_tsdb_spark.config import SCHEMA_FILE
+
+    d = json.loads(TSDBConfig(aggregation_granularity="2h").to_json())
+    d["samples_partitions"] = "dt"
+    (tmp_path / SCHEMA_FILE).write_text(json.dumps(d))
+    assert TSDBConfig.load(str(tmp_path)) == TSDBConfig(aggregation_granularity="2h")

@@ -191,32 +191,36 @@ class TestRowCountChannelProbes:
 
 
 def test_head_contains_control_matrix():
-    """r16 pinned the control-matrix rows into the head so ONE driver
-    run gated them (VERDICT r15 next-round #1/#3) — which happened:
-    CORRECTNESS_r16 has all of them hash-green, evidence valid through
-    the 4-window cycle. The r17 head ROTATES (the rotation contract in
-    the queries() docstring): this pin now guards the r17 plan — the
-    two never-gated rows, the standing environment probe, and the
-    oldest-evidence r13 cohort must sit in slots 0-49 so the r17 gate
-    clears the stale set check_rotation --simulate models."""
+    """The r17 head pinned the two never-gated rows, the standing
+    environment probe and the r13 evidence cohort into slots 0-49 so
+    ONE gate run covered them — which happened: CORRECTNESS_r17 has
+    all of them hash-green, evidence valid through the 4-window cycle.
+    The r18 head ROTATES (the rotation contract in the queries()
+    docstring): this pin now guards the r18 plan — the standing
+    environment probe and a spot-check of the oldest-evidence r14
+    cohort must sit in slots 0-49 so the r18 gate clears the stale set
+    check_rotation --simulate models."""
+    import json
+    import os
+
     import __spark_entry__ as E
 
     head = list(E.queries())[:50]
-    for name in ("diag_session_config", "doc_calibration",
-                 "doc_dsir_scores", "tpch_q15_top_supplier",
-                 "mm_wav_features", "emb_semantic_decontaminate",
-                 "tsdb_interp_linear", "doc_dedup_clusters",
-                 "stream_counter_increase", "doc_length_histogram"):
+    for name in ("diag_session_config", "doc_normalized_dedup",
+                 "tsdb_mad_daily", "doc_cooccur_pmi",
+                 "doc_classifier_score", "events_hist_quantile",
+                 "stream_cms_sketch", "tsdb_slo_burn", "emb_mmr_topk",
+                 "events_pagerank"):
         assert name in head, name
-    # and the r16 matrix really is r16-green (the reason it may leave)
-    import json
-
-    with open("/root/repo/CORRECTNESS_r16.json") as f:
+    # and the r17 head really is r17-green (the reason it may leave)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "CORRECTNESS_r17.json")) as f:
         art = json.load(f)
-    for name in ("diag_det_mn_code", "det_mn_probe",
-                 "events_session_digest", "events_markov_transitions",
-                 "events_session_score_panel", "events_session_perplexity",
-                 "stream_session_perplexity", "mm_image_ahash"):
+    for name in ("doc_calibration", "doc_dsir_scores",
+                 "tpch_q15_top_supplier", "mm_wav_features",
+                 "emb_semantic_decontaminate", "tsdb_interp_linear",
+                 "doc_dedup_clusters", "stream_counter_increase",
+                 "doc_length_histogram"):
         assert art[name]["hash_match"] is True, name
 
 

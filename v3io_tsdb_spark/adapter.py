@@ -12,7 +12,6 @@ Mirrors the reference's V3ioAdapter surface
 
 from __future__ import annotations
 
-import glob
 import os
 import shutil
 import uuid
@@ -25,7 +24,9 @@ from v3io_tsdb_spark import rollup as ru
 from v3io_tsdb_spark.catalog import NamesCatalog
 from v3io_tsdb_spark.config import SCHEMA_FILE, TSDBConfig
 from v3io_tsdb_spark.errors import BadRequest, SchemaError
+from v3io_tsdb_spark.operators.bucketing import wall_bucket
 from v3io_tsdb_spark.querier import Querier, SelectParams
+from v3io_tsdb_spark.schema import has_partitions, read_samples
 from v3io_tsdb_spark.sql.filters import translate_filter
 from v3io_tsdb_spark.timeutils import str2unix_ms
 
@@ -132,12 +133,25 @@ def _swap_dirs(live: str, staged: str) -> None:
     shutil.rmtree(old)
 
 
+def _publish_sidecar(df: DataFrame, path: str) -> None:
+    """Replace the one-file sidecar table at ``path`` with ``df``: the
+    new copy is written to a staging directory first, then swapped in
+    (:func:`_swap_dirs`), or renamed into place when there is no
+    sidecar yet — a failed write leaves the old sidecar untouched."""
+    tmp = path + "_staging"
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    if os.path.exists(path):
+        _swap_dirs(path, tmp)
+    else:
+        os.rename(tmp, path)
+
+
 class TSDBAdapter:
     def __init__(self, spark: SparkSession, path: str, config: TSDBConfig | None = None):
         self.spark = spark
         self.path = path
         self._samples_root = os.path.join(path, "samples")
-        self._rollup_root = os.path.join(path, "rollup")
+        self._rollup_root = os.path.join(path, ru.RollupTable.dirname(None))
         self.kinds_path = os.path.join(path, "series_kinds")
         self.maxts_path = os.path.join(path, "series_maxts")
         # write-ahead sync tokens for the maxts sidecar: `pending` is
@@ -265,28 +279,21 @@ class TSDBAdapter:
         else:
             NamesCatalog.load(self.path).merge_batch(out).save()
         if update_rollup:
-            # reuse the checkpointed batch (no plan recompute). The
-            # pre-write repartition on rdt collapses the agg shuffle's
-            # 32-way fan-out to one file per date dir (measured at
-            # sf0.1: 150 files -> 30, write 3.8s -> 1.3s) — rollup rows
-            # per (batch, day) are bounded by series count; a
-            # deployment with very large per-day rollups adds a
-            # series-id salt here exactly like compact_samples
+            # reuse the checkpointed batch (no plan recompute)
             batch = out.drop("dt")
-            partial = ru.build_rollup(batch, self.config.granularity_ms)
-            partial = partial.withColumn(
-                "rdt", F.date_format(F.timestamp_millis(F.col("bucket")), "yyyy-MM-dd")
-            ).repartition(F.col("rdt"))
-            partial.write.mode("append").partitionBy("rdt").parquet(self.rollup_path)
-            for subset in self.config.pre_aggregates:
-                p = ru.build_label_rollup(batch, self.config.granularity_ms, tuple(subset))
-                p = p.withColumn(
-                    "rdt", F.date_format(F.timestamp_millis(F.col("bucket")), "yyyy-MM-dd")
-                ).repartition(F.col("rdt"))
-                p.write.mode("append").partitionBy("rdt").parquet(self._label_rollup_path(subset))
+            for table in self._rollup_tables():
+                ru.write_rollup(table.build(batch, self.config.granularity_ms), table.path)
 
-    def _label_rollup_path(self, subset) -> str:
-        return os.path.join(self.path, "rollup_by_" + "_".join(subset))
+    def _rollup_tables(self) -> list:
+        """Every rollup table this TSDB maintains: the per-series rollup,
+        then one cross-label pre-aggregate per ``pre_aggregates``
+        subset. Paths resolve through the generation pointer like
+        :attr:`rollup_path`."""
+        subsets = [None] + [tuple(s) for s in self.config.pre_aggregates]
+        return [
+            ru.RollupTable(s, _gen_resolve(os.path.join(self.path, ru.RollupTable.dirname(s))))
+            for s in subsets
+        ]
 
     def start_time(self) -> int | None:
         """Earliest queryable sample time in ms, or None for an empty
@@ -342,7 +349,7 @@ class TSDBAdapter:
         same manifest-pointer discipline Delta/Iceberg use, minus the
         transaction log (single-writer compaction assumed either
         way)."""
-        if not glob.glob(os.path.join(self.samples_path, "dt=*")):
+        if not has_partitions(self.samples_path, "dt"):
             return
         src = self.samples_path
         df = self.spark.read.parquet(src)
@@ -374,38 +381,28 @@ class TSDBAdapter:
         """Merge partial rollup rows (optional maintenance).
         ``online=True`` publishes via the generation pointer exactly
         like :meth:`compact_samples` — safe under concurrent readers."""
-        if not glob.glob(os.path.join(self.rollup_path, "rdt=*")):
+        if not has_partitions(self.rollup_path, "rdt"):
             return
         src = self.rollup_path
         merged = ru.merge_partials(self.spark.read.parquet(src).drop("rdt"))
-        merged = merged.withColumn(
-            "rdt", F.date_format(F.timestamp_millis(F.col("bucket")), "yyyy-MM-dd")
-        )
         if online:
             gen = _gen_next(self._rollup_root)
-            merged.write.mode("overwrite").partitionBy("rdt").parquet(
-                os.path.join(self._rollup_root, gen)
-            )
+            ru.write_rollup(merged, os.path.join(self._rollup_root, gen), "overwrite")
             _gen_publish(self._rollup_root, gen, src)
         else:
             tmp = src + "_compacting"
-            merged.write.mode("overwrite").partitionBy("rdt").parquet(tmp)
+            ru.write_rollup(merged, tmp, "overwrite")
             _swap_dirs(src, tmp)
 
     # -- query -------------------------------------------------------------
 
     def querier(self) -> Querier:
         self._maybe_reload_schema()
-        rollup = self.rollup_path if os.path.exists(self.rollup_path) else None
-        label_rollups = {
-            tuple(subset): self._label_rollup_path(subset)
-            for subset in self.config.pre_aggregates
-            if os.path.exists(self._label_rollup_path(subset))
-        }
+        tables = {t.labels: t.path for t in self._rollup_tables() if t.exists()}
         cat = NamesCatalog.load(self.path)
         return Querier(
-            self.spark, self.samples_path, rollup=rollup,
-            config=self.config, label_rollups=label_rollups,
+            self.spark, self.samples_path, rollup=tables.pop(None, None),
+            config=self.config, label_rollups=tables,
             catalog={k: sorted(v) for k, v in cat.names.items()} if cat.exists() else None,
         )
 
@@ -430,20 +427,8 @@ class TSDBAdapter:
         return [r["name"] for r in self._samples().select("name").distinct().orderBy("name").collect()]
 
     def _samples(self) -> DataFrame:
-        """All stored samples; a table whose every partition has been
-        deleted reads as an EMPTY typed frame, not an
-        UNABLE_TO_INFER_SCHEMA error — a full-range delete must leave a
-        queryable (empty) table, like the reference's delete-all
-        (ref: pkg/tsdb/delete_integration_test.go:97-127)."""
-        import glob
-
-        if not glob.glob(os.path.join(self.samples_path, "dt=*")):
-            from v3io_tsdb_spark.schema import SAMPLES_SCHEMA
-
-            return self.spark.createDataFrame([], SAMPLES_SCHEMA).withColumn(
-                "dt", F.lit(None).cast("string")
-            )
-        return self.spark.read.parquet(self.samples_path)
+        """All stored samples (empty typed frame when none remain)."""
+        return read_samples(self.spark, self.samples_path)
 
     # -- delete ------------------------------------------------------------
 
@@ -495,9 +480,7 @@ class TSDBAdapter:
         doomed_rdts = [
             r["rdt"]
             for r in doomed.select(
-                F.date_format(
-                    F.timestamp_millis(F.col("ts") - F.col("ts") % F.lit(gran)), "yyyy-MM-dd"
-                ).alias("rdt")
+                ru.rdt_col(wall_bucket(F.col("ts"), gran)).alias("rdt")
             ).distinct().collect()
         ]
         prev_mode = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
@@ -510,14 +493,13 @@ class TSDBAdapter:
             # written frame — fully-emptied dt partitions must go explicitly
             for dt in set(affected_dts) - kept_dts:
                 shutil.rmtree(os.path.join(self.samples_path, f"dt={dt}"), ignore_errors=True)
-            if os.path.exists(self.rollup_path):
-                # dt reads back as DATE (partition-type inference) while
-                # rdt is a string — normalize to ISO strings for the
-                # scope set-math, re-typing at the filter boundary
-                target_rdts, source_dts = self._rollup_rebuild_scope(
-                    [str(d) for d in affected_dts], doomed_rdts
-                )
-                self._rebuild_rollup_for_dates(source_dts, target_rdts)
+            # dt reads back as DATE (partition-type inference) while
+            # rdt is a string — normalize to ISO strings for the
+            # scope set-math, re-typing at the filter boundary
+            target_rdts, source_dts = self._rollup_rebuild_scope(
+                [str(d) for d in affected_dts], doomed_rdts
+            )
+            self._rebuild_rollup_for_dates(source_dts, target_rdts)
             self._refresh_catalog()
         finally:
             self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
@@ -547,11 +529,11 @@ class TSDBAdapter:
         if (
             pending is not None
             and pending != _read_token(self._maxts_synced)
-            and glob.glob(os.path.join(self.samples_path, "dt=*"))
+            and has_partitions(self.samples_path, "dt")
         ):
             self._rebuild_maxts(self._samples())
         if not os.path.exists(self.maxts_path):
-            if glob.glob(os.path.join(self.samples_path, "dt=*")):
+            if has_partitions(self.samples_path, "dt"):
                 self._rebuild_maxts(self._samples())
             else:
                 return df
@@ -565,8 +547,7 @@ class TSDBAdapter:
         )
 
     def _update_maxts(self, batch) -> None:
-        """Fold a written batch into the high-water-mark sidecar
-        (crash-safe staged swap, like the kinds rebuild)."""
+        """Fold a written batch into the high-water-mark sidecar."""
         new = batch.groupBy("series_id").agg(F.max("ts").alias("max_ts"))
         if os.path.exists(self.maxts_path):
             old = self.spark.read.parquet(self.maxts_path)
@@ -575,22 +556,12 @@ class TSDBAdapter:
                 .groupBy("series_id")
                 .agg(F.max("max_ts").alias("max_ts"))
             )
-        tmp = self.maxts_path + "_staging"
-        new.coalesce(1).write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.maxts_path):
-            _swap_dirs(self.maxts_path, tmp)
-        else:
-            os.rename(tmp, self.maxts_path)
+        _publish_sidecar(new, self.maxts_path)
 
     def _rebuild_maxts(self, samples) -> None:
-        tmp = self.maxts_path + "_staging"
-        samples.groupBy("series_id").agg(
-            F.max("ts").alias("max_ts")
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.maxts_path):
-            _swap_dirs(self.maxts_path, tmp)
-        else:
-            os.rename(tmp, self.maxts_path)
+        _publish_sidecar(
+            samples.groupBy("series_id").agg(F.max("ts").alias("max_ts")), self.maxts_path
+        )
         # a full rebuild reflects every committed sample, so whatever
         # append the pending token came from is now folded in
         pending = _read_token(self._maxts_pending)
@@ -633,29 +604,15 @@ class TSDBAdapter:
 
     def _refresh_catalog(self) -> None:
         """Names may vanish when their last samples go — recompute the
-        catalog (and the series-kind sidecar) from the surviving data."""
-        try:
-            NamesCatalog.rebuild(self.path, self._samples()).save()
-        except Exception:  # all partitions gone → empty catalog
-            NamesCatalog(self.path).save()
-        try:
-            tmp = self.kinds_path + "_rebuilding"
-            app.series_kinds(self._samples()).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            if os.path.exists(self.kinds_path):
-                _swap_dirs(self.kinds_path, tmp)
-            else:
-                os.rename(tmp, self.kinds_path)
-        except Exception:
-            shutil.rmtree(self.kinds_path, ignore_errors=True)
+        catalog (and the series-kind sidecar) from the surviving data.
+        A failure propagates and leaves the old sidecar in place."""
+        samples = self._samples()
+        NamesCatalog.rebuild(self.path, samples).save()
+        _publish_sidecar(app.series_kinds(samples), self.kinds_path)
         # deletes can LOWER a series' high-water mark; a stale sidecar
         # would wrongly discard re-ingested history in no-override mode
         if os.path.exists(self.maxts_path):
-            try:
-                self._rebuild_maxts(self._samples())
-            except Exception:
-                shutil.rmtree(self.maxts_path, ignore_errors=True)
+            self._rebuild_maxts(samples)
 
     def _rollup_rebuild_scope(self, affected_dts: list, doomed_rdts: list) -> tuple:
         """(rdt partitions to rewrite, dt dates whose samples feed them).
@@ -693,31 +650,10 @@ class TSDBAdapter:
         else:
             src = list(source_dts)
         fresh = df.where(F.col("dt").isin(src)).drop("dt")
-        rdt_col = F.date_format(F.timestamp_millis(F.col("bucket")), "yyyy-MM-dd")
-        partial = (
-            ru.build_rollup(fresh, self.config.granularity_ms)
-            .withColumn("rdt", rdt_col)
-            .where(F.col("rdt").isin(target_rdts))
-        )
-        new_rdts = {r["rdt"] for r in partial.select("rdt").distinct().collect()}
-        partial.write.mode("overwrite").partitionBy("rdt").parquet(self.rollup_path)
-        # dynamic overwrite only rewrites partitions present in the
-        # frame — target rdts left with no buckets must go explicitly
-        stale = set(target_rdts) - new_rdts
-        for rdt in stale:
-            shutil.rmtree(os.path.join(self.rollup_path, f"rdt={rdt}"), ignore_errors=True)
-        for subset in self.config.pre_aggregates:
-            path = self._label_rollup_path(subset)
-            if not os.path.exists(path):
-                continue
-            p = (
-                ru.build_label_rollup(fresh, self.config.granularity_ms, tuple(subset))
-                .withColumn("rdt", rdt_col)
-                .where(F.col("rdt").isin(target_rdts))
-            )
-            p.write.mode("overwrite").partitionBy("rdt").parquet(path)
-            for rdt in stale:
-                shutil.rmtree(os.path.join(path, f"rdt={rdt}"), ignore_errors=True)
+        for table in self._rollup_tables():
+            if os.path.exists(table.path):
+                partial = table.build(fresh, self.config.granularity_ms)
+                ru.write_rollup(partial, table.path, "overwrite", dates=target_rdts)
 
     # -- retention ---------------------------------------------------------
 
@@ -744,12 +680,9 @@ class TSDBAdapter:
             now_ms = int(time.time() * 1000)
         cutoff_ms = now_ms - hours * 3_600_000
         gran = self.config.granularity_ms
-        dropped = {}
-        dropped["samples"] = self._drop_expired(self.samples_path, "dt", cutoff_ms, 0)
-        dropped["rollup"] = self._drop_expired(self.rollup_path, "rdt", cutoff_ms, gran)
-        for subset in self.config.pre_aggregates:
-            path = self._label_rollup_path(subset)
-            dropped[os.path.basename(path)] = self._drop_expired(path, "rdt", cutoff_ms, gran)
+        dropped = {"samples": self._drop_expired(self.samples_path, "dt", cutoff_ms, 0)}
+        for table in self._rollup_tables():
+            dropped[table.name] = self._drop_expired(table.path, "rdt", cutoff_ms, gran)
         if dropped["samples"]:
             self._refresh_catalog()
         return dropped

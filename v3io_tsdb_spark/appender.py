@@ -138,7 +138,7 @@ def series_kinds(df: DataFrame) -> DataFrame:
     )
 
 
-def prepare_for_write(df: DataFrame, config: TSDBConfig, num_buckets: int | None = None) -> DataFrame:
+def prepare_for_write(df: DataFrame, config: TSDBConfig) -> DataFrame:
     """Dedup + layout for the storage table.
 
     Dedup on (series_id, ts) replicates the reference's
@@ -153,6 +153,6 @@ def prepare_for_write(df: DataFrame, config: TSDBConfig, num_buckets: int | None
     """
     df = df.dropDuplicates(["series_id", "ts"])
     df = df.withColumn("dt", F.date_format(F.timestamp_millis(F.col("ts")), "yyyy-MM-dd"))
-    n = num_buckets or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     df = df.repartition(n, F.col("dt"), F.pmod(F.col("series_id"), F.lit(n)))
     return df.sortWithinPartitions("name", "series_id", "ts")

@@ -56,7 +56,6 @@ class TSDBConfig:
     pre_aggregates: tuple = ()  # tuple of tuples of label names
     max_late_arrival: str = "59m"
     override_old: bool = True
-    samples_partitions: str = "dt"  # derived yyyy-MM-dd partition column
     # Retention, in hours; 0 = keep forever. The sweep drops sample/
     # rollup date partitions wholly older than now - retention — the
     # analog of the reference's partition expiry
@@ -107,6 +106,9 @@ class TSDBConfig:
     @classmethod
     def from_json(cls, s: str) -> "TSDBConfig":
         d = json.loads(s)
+        # a field removed from the config; schema files written
+        # before its removal still carry it
+        d.pop("samples_partitions", None)
         d["aggregates"] = tuple(d.get("aggregates", DEFAULT_AGGREGATES))
         d["pre_aggregates"] = tuple(tuple(p) for p in d.get("pre_aggregates", []))
         return cls(**d)

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from v3io_tsdb_spark.errors import BadRequest
@@ -79,6 +79,17 @@ def labels_map_col(labels_str_col: Column) -> Column:
     return F.when(
         F.length(labels_str_col) == 0, F.create_map().cast("map<string,string>")
     ).otherwise(F.str_to_map(labels_str_col, F.lit(","), F.lit("=")))
+
+
+def group_keeping_labels(df: DataFrame, keys: list, aggs: list) -> DataFrame:
+    """groupBy that carries the ``labels`` map through as a serialized
+    group-key string (functionally dependent on series_id, so groups are
+    unchanged) instead of ``first(labels)`` — a map-typed aggregate
+    forces SortAggregate (two extra sorts); a string key keeps
+    HashAggregate."""
+    d = df.withColumn("_lstr", labels_string_col(F.col("labels")))
+    g = d.groupBy(*keys, "_lstr").agg(*aggs)
+    return g.withColumn("labels", labels_map_col(F.col("_lstr"))).drop("_lstr")
 
 
 def series_id_col(name_col: Column, labels_col: Column) -> Column:

@@ -26,38 +26,22 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from v3io_tsdb_spark import rollup as ru
+from v3io_tsdb_spark.appender import VARIANT_COLS
 from v3io_tsdb_spark.config import TSDBConfig
 from v3io_tsdb_spark.errors import BadRequest
-from v3io_tsdb_spark.labels import labels_map_col, labels_string_col, series_id_col
+from v3io_tsdb_spark.labels import (
+    group_keeping_labels,
+    labels_map_col,
+    labels_string_col,
+    series_id_col,
+)
 from v3io_tsdb_spark.operators import aggregates as agg
 from v3io_tsdb_spark.operators.bucketing import sliding_bucket_ids, tumbling_bucket
 from v3io_tsdb_spark.operators.interpolate import align_to_grid
+from v3io_tsdb_spark.schema import read_samples
 from v3io_tsdb_spark.sql.filters import translate_filter
 from v3io_tsdb_spark.timeutils import get_time_range, str2duration_ms
-
-
-def _group_keeping_labels(df: DataFrame, keys: list, aggs: list) -> DataFrame:
-    """groupBy that carries the ``labels`` map through as a serialized
-    group-key string (functionally dependent on series_id, so groups are
-    unchanged) instead of ``first(labels)`` — a map-typed aggregate
-    forces SortAggregate (two extra sorts); a string key keeps
-    HashAggregate."""
-    d = df.withColumn("_lstr", labels_string_col(F.col("labels")))
-    g = d.groupBy(*keys, "_lstr").agg(*aggs)
-    return g.withColumn("labels", labels_map_col(F.col("_lstr"))).drop("_lstr")
-
-
-def _rollup_combine_exprs() -> dict:
-    """Mergeable-aggregate algebra for combining rollup partials into
-    query cells (ref: pkg/aggregate/functions.go:48-79)."""
-    return {
-        "count": F.sum("count"),
-        "sum": F.sum("sum"),
-        "sqr": F.sum("sqr"),
-        "min": F.min("min"),
-        "max": F.max("max"),
-        "last": F.max_by("last", "last_ts"),
-    }
 
 
 @dataclass
@@ -128,32 +112,15 @@ class Querier:
     def samples_df(self) -> DataFrame:
         df = self._samples
         if isinstance(df, str):
-            import glob
-            import os
-
-            if not glob.glob(os.path.join(df, "dt=*")):
-                # a fully-deleted (or never-written) table: the
-                # reference returns an empty result set for a query
-                # over an empty TSDB, not an error — build an empty
-                # frame on the canonical on-disk schema instead of
-                # letting Parquet schema inference raise
-                # (ref: pkg/pquerier/querier.go Select over empty
-                # partitions yields an empty iterator)
-                from pyspark.sql import types as T
-
-                from v3io_tsdb_spark.appender import _INPUT_SCHEMA
-
-                schema = T.StructType(
-                    list(_INPUT_SCHEMA.fields)
-                    + [T.StructField("series_id", T.LongType()),
-                       T.StructField("dt", T.StringType())]
-                )
-                df = self.spark.createDataFrame([], schema)
-            else:
-                df = self.spark.read.parquet(df)
+            df = read_samples(self.spark, df)
         if "series_id" not in df.columns:
             df = df.withColumn("series_id", series_id_col(F.col("name"), F.col("labels")))
         return df
+
+    def has_rollup(self) -> bool:
+        """Whether a per-series rollup backs this querier — known from
+        construction, without opening the table."""
+        return self._rollup is not None
 
     def rollup_df(self) -> DataFrame | None:
         if self._rollup is None:
@@ -218,8 +185,6 @@ class Querier:
         partitions as a performance concession; here the distinct is a
         partial-aggregate over two pruned columns, so the exact full
         range costs less than the concession saved."""
-        from v3io_tsdb_spark.labels import labels_map_col, labels_string_col
-
         df = self.samples_df()
         if metric:
             names = [m.strip() for m in metric.split(",") if m.strip()]
@@ -391,7 +356,7 @@ class Querier:
         than mixing per-metric plans (ref: select.go:228-256)."""
         if cross_series:
             return True
-        if self.rollup_df() is None:
+        if not self.has_rollup():
             return True
         caps = [
             bool(fs) and self._rollup_step_ok(fs, step_ms, window_ms, params)
@@ -420,7 +385,7 @@ class Querier:
             .where(F.col("ts") > F.lit(max_aligned) - F.col("window") * F.lit(step_ms))
         )
         raws = agg.required_raw(funcs)
-        grouped = _group_keeping_labels(
+        grouped = group_keeping_labels(
             b, ["name", "series_id", "window"], agg.raw_agg_exprs(raws)
         )
         out = grouped.withColumn("t", F.lit(max_aligned) - F.col("window") * F.lit(step_ms))
@@ -496,8 +461,6 @@ class Querier:
         columns (ref: pkg/chunkenc/vartype.go — a series is float XOR
         one variant kind, so exactly one value column is non-null per
         row; unrequested kinds prune out of the Parquet scan)."""
-        from v3io_tsdb_spark.appender import VARIANT_COLS
-
         cols = ["name", "labels", "series_id", F.col("ts").alias("t"), "value"]
         cols += [c for c, _ in VARIANT_COLS if c in base.columns]
         return base.select(*cols)
@@ -509,8 +472,6 @@ class Querier:
         tolerance) on the same step grid, full-outer joined into one
         frame — the DataFrame analog of the reference emitting one
         series per requested column."""
-        from v3io_tsdb_spark.operators.interpolate import align_to_grid
-
         agg_res = self._aggregate(base, params, funcs, from_ms, to_ms, step_ms, 0, [])
         agg_res = self._mask_unrequested(agg_res, params, funcs)
         metric_interp = self._metric_interp(params)
@@ -644,8 +605,6 @@ class Querier:
         # sample kind — a variant (string) series answers count like
         # the reference (ref: pqueriertest/variant_type_query_
         # integration_test.go:177-245); numeric aggs skip the nulls
-        from v3io_tsdb_spark.appender import VARIANT_COLS
-
         presence = F.col("value").isNotNull()
         for vc, _ in VARIANT_COLS:
             if vc in base.columns:
@@ -667,9 +626,7 @@ class Querier:
             grouped = b.groupBy(*keys).agg(*agg_exprs)
             part_keys = ["name"] + group_by
         else:
-            grouped = _group_keeping_labels(
-                b, ["name", "series_id", "t"], agg_exprs
-            )
+            grouped = group_keeping_labels(b, ["name", "series_id", "t"], agg_exprs)
             part_keys = ["name", "series_id"]
         return self._finish_aggregate(grouped, funcs, raws, step_ms, part_keys, group_by)
 
@@ -705,23 +662,11 @@ class Querier:
             tolerance_ms=tol,
         )
         raws = agg.required_raw(funcs)
-        keys = [F.col("name")] + (self._group_keys_from_map(aligned, group_by) if group_by else []) + [F.col("t")]
+        keys = [F.col("name")] + self._group_keys(group_by) + [F.col("t")]
         grouped = aligned.groupBy(*keys).agg(
             *agg.raw_agg_exprs(raws, value_col="value", ts_col="series_id")
         )
-        part_keys = ["name"] + group_by
-        out = grouped
-        if "rate" in funcs:
-            w = Window.partitionBy(*part_keys).orderBy("t")
-            out = out.withColumn("rate", agg.rate_col(F.col("last"), F.lag("last").over(w), step_ms))
-        for f in funcs:
-            if f in ("avg", "stddev", "stdvar"):
-                out = out.withColumn(f, agg.derived_col(f, step_ms))
-        head = ["name"] + (group_by or []) + ["t"]
-        return out.select(*head, *[F.col(f).alias(f) for f in funcs])
-
-    def _group_keys_from_map(self, df, group_by):
-        return [F.element_at(F.col("labels"), g).alias(g) for g in group_by]
+        return self._finish_aggregate(grouped, funcs, raws, step_ms, ["name"] + group_by, group_by)
 
     # -- rollup ("server aggregates") routing ------------------------------
 
@@ -745,8 +690,6 @@ class Querier:
             # CanAggregate: aggregationWindow must cover ≥ one rollup
             # bucket (ref: pkg/aggregate/aggregationParams.go:76-77)
             return False
-        if "rate" in funcs:
-            pass  # rate derives from 'last', which rollups carry
         needed = set(agg.required_raw(funcs))
         if not needed.issubset(set(self.config.aggregates)):
             return False
@@ -759,7 +702,7 @@ class Querier:
     def _can_use_rollup(self, funcs, step_ms, window_ms, params: SelectParams) -> bool:
         """The ~100-line query router (SURVEY §4): use the materialized
         per-series rollup iff it exists and _rollup_step_ok holds."""
-        if self.rollup_df() is None:
+        if not self.has_rollup():
             return False
         return self._rollup_step_ok(funcs, step_ms, window_ms, params)
 
@@ -769,11 +712,11 @@ class Querier:
         """Choose a cross-label pre-aggregate table when GroupBy exactly
         matches a declared label subset and the filter only references
         those labels (ref: pkg/pquerier/select.go:261-283)."""
-        if not group_by:
+        if not group_by or self._label_rollups.get(tuple(sorted(group_by))) is None:
+            return None
+        if not self._rollup_step_ok(funcs, step_ms, window_ms, params):
             return None
         r = self.label_rollup_df(group_by)
-        if r is None or not self._rollup_step_ok(funcs, step_ms, window_ms, params):
-            return None
         if params.filter:
             pred = translate_filter(params.filter)
             for g in group_by:
@@ -831,10 +774,7 @@ class Querier:
             r = r.where(F.col("name").isin(names))
         r = self._rollup_cells(r, from_ms, to_ms, step_ms, window_ms)
         raws = agg.required_raw(funcs)
-        combine = _rollup_combine_exprs()
-        grouped = r.groupBy("name", *group_by, "t").agg(
-            *[combine[x].alias(x) for x in raws]
-        )
+        grouped = r.groupBy("name", *group_by, "t").agg(*ru.merge_exprs(raws))
         return self._finish_aggregate(grouped, funcs, raws, step_ms, ["name"] + group_by, group_by)
 
     def _aggregate_from_rollup(
@@ -855,14 +795,11 @@ class Querier:
         r = self._rollup_cells(r, from_ms, to_ms, step_ms, window_ms)
 
         raws = agg.required_raw(funcs)
-        combine = _rollup_combine_exprs()
         if group_by:
-            keys = [F.col("name")] + self._group_keys_from_map(r, group_by) + [F.col("t")]
-            grouped = r.groupBy(*keys).agg(*[combine[x].alias(x) for x in raws])
+            keys = [F.col("name")] + self._group_keys(group_by) + [F.col("t")]
+            grouped = r.groupBy(*keys).agg(*ru.merge_exprs(raws))
             part_keys = ["name"] + group_by
         else:
-            grouped = _group_keeping_labels(
-                r, ["name", "series_id", "t"], [combine[x].alias(x) for x in raws]
-            )
+            grouped = group_keeping_labels(r, ["name", "series_id", "t"], ru.merge_exprs(raws))
             part_keys = ["name", "series_id"]
         return self._finish_aggregate(grouped, funcs, raws, step_ms, part_keys, group_by)

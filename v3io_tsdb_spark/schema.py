@@ -1,4 +1,4 @@
-"""Core table schemas.
+"""Core table schemas, and how a samples table with no partition reads.
 
 Long-format samples table + rollup table, per SURVEY.md §7.1 and the
 reference's data model (ref: pkg/aggregate/aggregate.go:68-79 for the
@@ -12,6 +12,11 @@ predicates prune Parquet partitions.
 
 from __future__ import annotations
 
+import glob
+import os
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 SAMPLES_SCHEMA = T.StructType(
@@ -37,6 +42,8 @@ SAMPLES_SCHEMA = T.StructType(
     ]
 )
 
+# the per-series rollup format: build_rollup and merge_partials output
+# exactly these fields in this order (``rollup.py`` owns the writer)
 ROLLUP_SCHEMA = T.StructType(
     [
         T.StructField("bucket", T.LongType(), False),  # unix ms, floor(ts/gran)*gran
@@ -52,3 +59,25 @@ ROLLUP_SCHEMA = T.StructType(
         T.StructField("last_ts", T.LongType(), True),
     ]
 )
+
+
+def has_partitions(path: str, key: str) -> bool:
+    """Whether the table at ``path`` holds any ``key=`` partition
+    directory — a listing, no Spark read."""
+    return bool(glob.glob(os.path.join(path, f"{key}=*")))
+
+
+def read_samples(spark: SparkSession, path: str) -> DataFrame:
+    """The samples table at ``path``. A table with no ``dt=`` partition
+    (never written, or every partition deleted) reads as an EMPTY frame
+    on the stored layout — SAMPLES_SCHEMA plus ``dt`` — not as an
+    UNABLE_TO_INFER_SCHEMA error: a query over an empty TSDB returns an
+    empty result (ref: pkg/pquerier/querier.go Select over empty
+    partitions), and a full-range delete leaves a queryable table, like
+    the reference's delete-all (ref: pkg/tsdb/delete_integration_test.go:
+    97-127)."""
+    if not has_partitions(path, "dt"):
+        return spark.createDataFrame([], SAMPLES_SCHEMA).withColumn(
+            "dt", F.lit(None).cast("string")
+        )
+    return spark.read.parquet(path)
