@@ -689,10 +689,12 @@ def test_rollup_builders_emit_the_rollup_schema(spark, make_samples):
 def test_delete_kinds_rebuild_failure_keeps_sidecar(tmp_path, spark, monkeypatch):
     """A failed series-kind rebuild during delete() propagates: the
     delete raises and the old kinds sidecar is still there, instead of
-    the failure being swallowed and the sidecar deleted."""
+    the failure being swallowed and the sidecar deleted. The maxts
+    sidecar it left unrebuilt is reseeded on the next no-override
+    append, so re-ingesting the deleted range is not dropped."""
     from v3io_tsdb_spark import appender
 
-    a = _mk(tmp_path, spark)
+    a = _mk(tmp_path, spark, override_old=False)
     a.append(
         [{"ts": T0 + i * MIN, "name": "cpu", "labels": {}, "value": 1.0} for i in range(3)]
         + [{"ts": T0 + i * MIN, "name": "log", "labels": {}, "value_str": "x"} for i in range(3)]
@@ -705,9 +707,13 @@ def test_delete_kinds_rebuild_failure_keeps_sidecar(tmp_path, spark, monkeypatch
 
     monkeypatch.setattr(appender, "series_kinds", failing_kinds)
     with pytest.raises(RuntimeError, match="kinds rebuild failed"):
-        a.delete(metrics=["cpu"])
+        a.delete(metrics=["cpu"], from_time=T0 + MIN)
     monkeypatch.undo()
     assert sorted(tuple(r) for r in spark.read.parquet(a.kinds_path).collect()) == before
+
+    a.append([{"ts": T0 + 2 * MIN, "name": "cpu", "labels": {}, "value": 2.0}])
+    cpu = a._samples().where("name = 'cpu'").orderBy("ts").collect()
+    assert [(r["ts"], r["value"]) for r in cpu] == [(T0, 1.0), (T0 + 2 * MIN, 2.0)]
 
 
 def test_schema_file_with_removed_samples_partitions_loads(tmp_path):

@@ -474,6 +474,10 @@ class TSDBAdapter:
         affected_dts = [r["dt"] for r in doomed.select("dt").distinct().collect()]
         if not affected_dts:
             return
+        # a rollup table is maintained once its directory exists, even
+        # with every rdt partition gone; the querier instead needs a
+        # partition to read (RollupTable.exists)
+        tables = [t for t in self._rollup_tables() if os.path.exists(t.path)]
         # rdt partitions the doomed rows' buckets land in (bucket-date can
         # differ from sample-date when granularity doesn't divide a day)
         gran = self.config.granularity_ms
@@ -482,27 +486,30 @@ class TSDBAdapter:
             for r in doomed.select(
                 ru.rdt_col(wall_bucket(F.col("ts"), gran)).alias("rdt")
             ).distinct().collect()
-        ]
-        prev_mode = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            kept = df.where(F.col("dt").isin(affected_dts)).where(~cond)
-            kept_dts = {r["dt"] for r in kept.select("dt").distinct().collect()}
-            kept.write.mode("overwrite").partitionBy("dt").parquet(self.samples_path)
-            # dynamic overwrite only rewrites partitions present in the
-            # written frame — fully-emptied dt partitions must go explicitly
-            for dt in set(affected_dts) - kept_dts:
-                shutil.rmtree(os.path.join(self.samples_path, f"dt={dt}"), ignore_errors=True)
+        ] if tables else []
+        if os.path.exists(self.maxts_path):
+            # write-ahead, as in append: the rewrite can lower a series'
+            # high-water mark, and until _refresh_catalog rebuilds the
+            # sidecar, pending != synced makes the next no-override
+            # append reseed it from the surviving samples
+            _write_token(self._maxts_pending, uuid.uuid4().hex)
+        kept = df.where(F.col("dt").isin(affected_dts)).where(~cond)
+        kept_dts = {r["dt"] for r in kept.select("dt").distinct().collect()}
+        writer = kept.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        writer.partitionBy("dt").parquet(self.samples_path)
+        # dynamic overwrite only rewrites partitions present in the
+        # written frame — fully-emptied dt partitions must go explicitly
+        for dt in set(affected_dts) - kept_dts:
+            shutil.rmtree(os.path.join(self.samples_path, f"dt={dt}"), ignore_errors=True)
+        if tables:
             # dt reads back as DATE (partition-type inference) while
             # rdt is a string — normalize to ISO strings for the
             # scope set-math, re-typing at the filter boundary
             target_rdts, source_dts = self._rollup_rebuild_scope(
                 [str(d) for d in affected_dts], doomed_rdts
             )
-            self._rebuild_rollup_for_dates(source_dts, target_rdts)
-            self._refresh_catalog()
-        finally:
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+            self._rebuild_rollup_for_dates(tables, source_dts, target_rdts)
+        self._refresh_catalog()
 
     def _monotonic_filter(self, df):
         """``override_old=False`` ingest mode: drop samples at-or-before
@@ -639,7 +646,7 @@ class TSDBAdapter:
                 source.add(_date_shift(r, k))  # later days feeding bucket of r
         return sorted(target), sorted(source)
 
-    def _rebuild_rollup_for_dates(self, source_dts: list, target_rdts: list) -> None:
+    def _rebuild_rollup_for_dates(self, tables: list, source_dts: list, target_rdts: list) -> None:
         from datetime import date
 
         df = self._samples()
@@ -650,10 +657,9 @@ class TSDBAdapter:
         else:
             src = list(source_dts)
         fresh = df.where(F.col("dt").isin(src)).drop("dt")
-        for table in self._rollup_tables():
-            if os.path.exists(table.path):
-                partial = table.build(fresh, self.config.granularity_ms)
-                ru.write_rollup(partial, table.path, "overwrite", dates=target_rdts)
+        for table in tables:
+            partial = table.build(fresh, self.config.granularity_ms)
+            ru.write_rollup(partial, table.path, "overwrite", dates=target_rdts)
 
     # -- retention ---------------------------------------------------------
 

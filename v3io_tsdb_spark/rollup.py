@@ -115,21 +115,27 @@ def write_rollup(
     Every write repartitions on ``rdt`` first, so it leaves one file
     per date directory instead of the aggregation shuffle's fan-out
     (measured at sf0.1 on the append path: 150 files -> 30, write
-    3.8s -> 1.3s). Rollup rows per (write, day) are bounded by the
-    series count; a deployment with very large per-day rollups would
-    add a series-id salt here, as ``compact_samples`` does.
+    3.8s -> 1.3s). An append writes only its batch's (series, bucket)
+    rows, so each day's share is small; compaction and the delete
+    rebuild write every series x bucket of a day, still in one task.
+    A deployment with very large per-day rollups would add a
+    series-id salt here, as ``compact_samples`` does.
 
-    ``dates`` makes the write a replacement of exactly those ``rdt``
-    partitions (the caller sets dynamic partition overwrite): rows on
-    other dates are dropped, and a listed date left with no bucket is
-    removed, since a dynamic overwrite only rewrites the partitions
-    present in the frame."""
+    The writer sets the partition-overwrite mode itself, whatever the
+    session's: an overwrite without ``dates`` replaces the whole table,
+    and ``dates`` makes it a replacement of exactly those ``rdt``
+    partitions. Rows on other dates are dropped, and a listed date left
+    with no bucket is removed, since a dynamic overwrite only rewrites
+    the partitions present in the frame."""
     out = partial.withColumn("rdt", rdt_col(F.col("bucket")))
+    overwrite = "static"
     stale = set()
     if dates is not None:
         out = out.where(F.col("rdt").isin(list(dates)))
         stale = set(dates) - {r["rdt"] for r in out.select("rdt").distinct().collect()}
-    out.repartition(F.col("rdt")).write.mode(mode).partitionBy("rdt").parquet(path)
+        overwrite = "dynamic"
+    writer = out.repartition(F.col("rdt")).write.mode(mode)
+    writer.option("partitionOverwriteMode", overwrite).partitionBy("rdt").parquet(path)
     for day in stale:
         shutil.rmtree(os.path.join(path, f"rdt={day}"), ignore_errors=True)
 
